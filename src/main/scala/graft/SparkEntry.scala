@@ -359,11 +359,9 @@ object SparkEntry {
     //      the distributed expansion path with SQL-replayable rules ----
     "q_synonym_expand" -> ((s, dir) => {
       val dict = SynonymDict.parse(Seq("spark => apachespark", "join,merge"))
-      val bc = s.sparkContext.broadcast(dict)
-      val ex = udf((ts: Seq[String]) => bc.value.expand(ts.toIndexedSeq))
       t(s, dir, "documents")
-        .select(explode(ex(graft.functions.graftFunctions.qube_tokenize(col("text")))).as("term"))
-        .groupBy("term").agg(count(lit(1)).as("n")).orderBy("term")
+        .select(explode(graft.functions.graftFunctions.qube_tf(col("text"), dict)).as("p"))
+        .groupBy(col("p.term").as("term")).agg(sum("p.tf").as("n")).orderBy("term")
     }),
 
     // ---- facets over TPC-H tables (SURVEY.md §2.5) ----

@@ -48,28 +48,16 @@ final class SynonymDict(
   def isEmpty: Boolean = entries.isEmpty
 
   /** First-token dispatch index (the hash-map stand-in for the
-    * reference's FST arc dispatch): the per-position probe in [[expand]]
-    * is ONE String-keyed hash lookup; only on a first-token hit are the
+    * reference's FST arc dispatch): the per-position probe in
+    * [[expandU8]] is ONE hash lookup; only on a first-token hit are the
     * (few) multi-token keys compared in place, longest first. A naive
     * Map[Vector[String], _] probe per position allocates a slice and does
     * boxed element-wise equality — measured ~100× slower on the index
-    * build's hot loop. @transient lazy: rebuilt per JVM after the plan
-    * ships the dict to executors. */
-  @transient private lazy val byFirst
-      : java.util.HashMap[String, Array[(Array[String], SynEntry)]] = {
-    val m = new java.util.HashMap[String, Array[(Array[String], SynEntry)]]()
-    entries.toSeq.groupBy(_._1.head).foreach { case (first, es) =>
-      m.put(first,
-        es.sortBy(-_._1.length).map { case (k, e) => (k.toArray, e) }.toArray)
-    }
-    m
-  }
-
-  /** UTF8String twin of [[byFirst]] for the byte-native analysis chain:
-    * same entries with keys and flattened outputs pre-encoded to UTF-8
-    * once per JVM. Candidate order is longest-first as in [[byFirst]];
-    * among equal-length same-first-token keys order is irrelevant (two
-    * distinct keys of equal length cannot both match one span). */
+    * build's hot loop. Keys and flattened outputs are pre-encoded to
+    * UTF-8 once per JVM; among equal-length same-first-token keys order
+    * is irrelevant (two distinct keys of equal length cannot both match
+    * one span). @transient lazy: rebuilt per JVM after the plan ships
+    * the dict to executors. */
   @transient private lazy val byFirstU8
       : java.util.HashMap[org.apache.spark.unsafe.types.UTF8String, Array[SynonymDict.U8Rule]] = {
     import org.apache.spark.unsafe.types.UTF8String
@@ -100,11 +88,12 @@ final class SynonymDict(
     f
   }
 
-  /** UTF8String twin of [[expand]] — the exact greedy recursion with the
-    * String probe replaced by a byte-equality probe (identical matches:
-    * UTF-8 encoding is injective on tokenizer output, so String equality
-    * ⟺ byte equality). Emit order identical: keepOrig originals first,
-    * then outputs flattened in rule order. */
+  /** Greedy earliest-longest expansion over an (already case-folded)
+    * token sequence — the ONE production expansion ([[Analyzer.terms]]
+    * and every build pass / Catalyst operator). Pure; deterministic
+    * output order: keepOrig originals first, then outputs flattened in
+    * rule order. Pinned against the String reference it replaced
+    * (`graft.golden.StringAnalysis.expand`) by U8TokenizerSpec. */
   def expandU8(tokens: Array[org.apache.spark.unsafe.types.UTF8String])
       : Array[org.apache.spark.unsafe.types.UTF8String] = {
     if (entries.isEmpty) return tokens
@@ -153,48 +142,6 @@ final class SynonymDict(
     out.toArray(
       new Array[org.apache.spark.unsafe.types.UTF8String](out.size))
   }
-
-  /** Greedy earliest-longest expansion over an (already case-folded)
-    * token sequence. Pure; deterministic output order: keepOrig originals
-    * first, then outputs in rule order. */
-  def expand(tokens: IndexedSeq[String]): Vector[String] = {
-    if (entries.isEmpty) return tokens.toVector
-    val out = Vector.newBuilder[String]
-    val idx = byFirst
-    var i = 0
-    val n = tokens.length
-    while (i < n) {
-      val cands = idx.get(tokens(i))
-      var matched: SynEntry = null
-      var matchLen = 0
-      if (cands != null) {
-        var c = 0
-        while (matched == null && c < cands.length) {
-          val (key, e) = cands(c)
-          if (key.length <= n - i) {
-            var k = 1 // first token already matched by the hash probe
-            var ok = true
-            while (ok && k < key.length) {
-              if (key(k) != tokens(i + k)) ok = false else k += 1
-            }
-            if (ok) { matched = e; matchLen = key.length }
-          }
-          c += 1
-        }
-      }
-      if (matched != null) {
-        if (matched.keepOrig) {
-          var k = i; while (k < i + matchLen) { out += tokens(k); k += 1 }
-        }
-        matched.outputs.foreach(o => o.tokens.foreach(out += _))
-        i += matchLen
-      } else {
-        out += tokens(i)
-        i += 1
-      }
-    }
-    out.result()
-  }
 }
 
 object SynonymDict {
@@ -218,8 +165,8 @@ object SynonymDict {
     else (phrase.substring(0, idx), Some(phrase.substring(idx + 1)))
   }
 
-  private def keyOf(phrase: String): Vector[String] =
-    Tokenizer.tokenize(phrase).toVector // fold + split in one pass
+  private def keyOf(phrase: String): Vector[String] = // fold + split
+    Analyzer.terms(phrase, Tokenizer.Text, empty).toVector
 
   /** Programmatic rule add mirroring `SynonymMap.add(input, output,
     * keepOrig)`. Build with `builder += ((in, out, keepOrig, lang))`. */

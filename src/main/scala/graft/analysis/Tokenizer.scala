@@ -1,8 +1,6 @@
 package graft.analysis
 
-import scala.collection.mutable.ArrayBuffer
-
-/** Tokenization + case folding (SURVEY.md §2.2 A1/A2).
+/** Tokenization + case folding contract (SURVEY.md §2.2 A1/A2).
   *
   * Semantics mirror the reference's whitespace analyzer + UPPERCASE fold:
   *  - split on Unicode whitespace (`Character.isWhitespace(int)`) — the
@@ -14,6 +12,13 @@ import scala.collection.mutable.ArrayBuffer
   *    (`src/SynonymFilter.java:42-44`, match-time fold at :401); this is
   *    locale-independent (no Turkish-İ problem) and maps ß→ß (the
   *    single-codepoint uppercase of ß does not exist).
+  *
+  * There is ONE production tokenizer: the UTF-8 byte walk
+  * [[graft.functions.GraftRuntime.tokensU8]], reached from Strings via
+  * [[Analyzer.terms]]. Malformed UTF-8 is re-encoded once (U+FFFD per
+  * bad sequence, java.lang.String's decode semantics) and walked again.
+  * The java.lang.String tokenizer the byte walk replaced lives on in the
+  * test sources as the golden reference (`graft.golden.StringAnalysis`).
   */
 object Tokenizer {
 
@@ -28,59 +33,14 @@ object Tokenizer {
   val Text = "text"
   val Keyword = "keyword"
 
-  def tokenize(text: String): Array[String] = tokenize(text, Text)
-
-  def tokenize(text: String, mode: String): Array[String] = {
-    if (text == null) return Array.empty
-    val keyword = mode == Keyword
-    require(keyword || mode == Text, s"unknown analyzer mode '$mode'")
-    val out = new ArrayBuffer[String]()
-    val sb = new java.lang.StringBuilder(16)
-    var i = 0
-    val n = text.length
-    while (i < n) {
-      val cp = text.codePointAt(i)
-      val isSep =
-        if (keyword) !Character.isLetterOrDigit(cp)
-        else Character.isWhitespace(cp)
-      if (isSep) {
-        if (sb.length > 0) { out += sb.toString; sb.setLength(0) }
-      } else {
-        sb.appendCodePoint(Character.toUpperCase(cp))
-      }
-      i += Character.charCount(cp)
-    }
-    if (sb.length > 0) out += sb.toString
-    out.toArray
-  }
-
-  /** Uppercase a single already-split token (used for query terms and
-    * synonym-dictionary keys so both sides of the match fold identically). */
+  /** Uppercase a single already-split token (caller-split query terms,
+    * prefix / wildcard / fuzzy / range operands): the tokenizer's fold,
+    * so both sides of a match against index terms fold identically. */
   def foldCase(token: String): String = {
     val sb = new java.lang.StringBuilder(token.length)
     var i = 0
     while (i < token.length) {
       val cp = token.codePointAt(i)
-      sb.appendCodePoint(Character.toUpperCase(cp))
-      i += Character.charCount(cp)
-    }
-    sb.toString
-  }
-
-  /** Sort-key normalization (SURVEY.md A4): the reference routes string
-    * sort DocValues through `SymbolMap.apply(value.trim())` then UTF-8
-    * bytes (`src/Indexer.java:541-548`) for a case/width-insensitive sort.
-    * Our deterministic equivalent: trim → fullwidth→halfwidth fold of the
-    * FF01–FF5E block + U+3000 → codepoint uppercase. */
-  def normalizeSortKey(s: String): String = {
-    if (s == null) return null
-    val t = s.trim
-    val sb = new java.lang.StringBuilder(t.length)
-    var i = 0
-    while (i < t.length) {
-      var cp = t.codePointAt(i)
-      if (cp >= 0xFF01 && cp <= 0xFF5E) cp = cp - 0xFF01 + 0x21
-      else if (cp == 0x3000) cp = 0x20
       sb.appendCodePoint(Character.toUpperCase(cp))
       i += Character.charCount(cp)
     }

@@ -17,19 +17,18 @@ object GraftRuntime {
 
   // ---- UTF-8-native tokenization -----------------------------------------
   //
-  // The String path (Tokenizer.tokenize) decodes the whole text to a
-  // java.lang.String, materializes a String per token, then re-encodes
-  // each token to UTF-8 — three allocations plus two full transcodes per
-  // token on the hottest loop the engine has (every build pass and every
-  // on-the-fly text operator tokenizes each document). The native path
-  // walks the UTF-8 bytes directly and emits UTF8String tokens: one
-  // allocation per token, zero transcodes. Byte-identity with the String
-  // path is pinned by U8TokenizerSpec (valid UTF-8 round-trips exactly;
-  // Character.isWhitespace/isLetterOrDigit/toUpperCase see the same
-  // codepoints either way). Malformed UTF-8 — impossible for strings read
-  // from parquet, possible for raw fromBytes callers — falls back to the
-  // String path wholesale so java.lang.String's U+FFFD replacement
-  // semantics are inherited unchanged.
+  // The ONE production analysis chain: every build pass, every on-the-fly
+  // text operator and (through graft.analysis.Analyzer) every String-side
+  // query/rule analysis tokenizes here. The walk reads the UTF-8 bytes
+  // directly and emits UTF8String tokens: one allocation per token, zero
+  // transcodes — the java.lang.String tokenizer it replaced (three
+  // allocations plus two full transcodes per token) survives only as the
+  // test golden, and U8TokenizerSpec pins the two byte-identical (valid
+  // UTF-8 round-trips exactly; Character.isWhitespace/isLetterOrDigit/
+  // toUpperCase see the same codepoints either way). Malformed UTF-8 —
+  // impossible for strings read from parquet, possible for raw fromBytes
+  // callers — is re-encoded once (`reencode`: java.lang.String's U+FFFD
+  // replacement per bad sequence) and walked again.
 
   private val U8_EMPTY = new Array[UTF8String](0)
 
@@ -90,24 +89,21 @@ object GraftRuntime {
     }
   }
 
-  /** Tokenize + uppercase fold straight off the UTF-8 bytes. Always
-    * returns the token array (native fast path, String fallback on
-    * malformed input). */
+  /** Tokenize + uppercase fold straight off the UTF-8 bytes. */
   def tokensU8(text: UTF8String, mode: String): Array[UTF8String] = {
     val keyword = mode == Tokenizer.Keyword
     require(keyword || mode == Tokenizer.Text, s"unknown analyzer mode '$mode'")
     val native = tokensU8Native(text, keyword)
-    if (native != null) native
-    else {
-      val toks = Tokenizer.tokenize(text.toString, mode)
-      val out = new Array[UTF8String](toks.length)
-      var i = 0
-      while (i < toks.length) { out(i) = UTF8String.fromString(toks(i)); i += 1 }
-      out
-    }
+    if (native != null) native else tokensU8Native(reencode(text), keyword)
   }
 
-  /** The native pass; null signals malformed UTF-8 (caller falls back). */
+  /** Valid UTF-8 for any input: decode with java.lang.String's U+FFFD
+    * replacement, encode back. The native walks take it on malformed
+    * input, so they never need a second (String) implementation. */
+  private def reencode(text: UTF8String): UTF8String =
+    UTF8String.fromString(text.toString)
+
+  /** The native pass; null signals malformed UTF-8 (caller re-encodes). */
   private def tokensU8Native(text: UTF8String,
                              keyword: Boolean): Array[UTF8String] = {
     val in = text.getBytes
@@ -163,8 +159,7 @@ object GraftRuntime {
 
   def normalizeSortKey(s: UTF8String): UTF8String = {
     val native = normalizeSortKeyNative(s)
-    if (native != null) native
-    else UTF8String.fromString(Tokenizer.normalizeSortKey(s.toString))
+    if (native != null) native else normalizeSortKeyNative(reencode(s))
   }
 
   /** Byte-native trim + fullwidth fold + uppercase (A4). String.trim
@@ -266,9 +261,9 @@ object GraftRuntime {
     * measurable build-phase cost. With no synonym dictionary the count
     * needs no token strings at all (a codepoint walk counting separator
     * transitions); with one, expansion can change the count in ways only
-    * `SynonymDict.expand` knows, so the tokens materialize and expand
+    * `SynonymDict.expandU8` knows, so the tokens materialize and expand
     * exactly as [[tfPairs]] does. Identity `docLen == tfPairs(...).dl`
-    * is pinned by ExpressionsSpec. */
+    * is pinned by DocLenSpec. */
   def docLen(dict: SynonymDict, text: UTF8String, mode: String): Int =
     if (!dict.isEmpty) dict.expandU8(tokensU8(text, mode)).length
     else {
@@ -276,24 +271,7 @@ object GraftRuntime {
       require(keyword || mode == Tokenizer.Text,
         s"unknown analyzer mode '$mode'")
       val native = docLenNative(text, keyword)
-      if (native >= 0) native
-      else { // malformed UTF-8: count over the U+FFFD-replaced String
-        val s = text.toString
-        var count = 0
-        var inTok = false
-        var i = 0
-        val n = s.length
-        while (i < n) {
-          val cp = s.codePointAt(i)
-          val isSep =
-            if (keyword) !Character.isLetterOrDigit(cp)
-            else Character.isWhitespace(cp)
-          if (isSep) inTok = false
-          else if (!inTok) { count += 1; inTok = true }
-          i += Character.charCount(cp)
-        }
-        count
-      }
+      if (native >= 0) native else docLenNative(reencode(text), keyword)
     }
 
   /** Separator-transition count over the raw UTF-8 bytes (no token or

@@ -674,31 +674,12 @@ object IndexBuilder {
     org.apache.spark.sql.graft.Bridge.fromInternal(spark, ids, outSchema)
   }
 
-  /** Analysis chain over the id-assigned pages: byte-identical text per
-    * url (pre-extracted `text` reused when present, else
-    * `extract_text(html)`), then the fused tokenize + synonym expand +
-    * per-doc tf/dl pass (`qube_tf`, SURVEY.md §2.2/§2.3). Fully columnar
-    * and whole-stage-codegen'd: no UDF round-trips, no token Seq objects
-    * in the cache, and — because a document's tokens live in one row — tf
-    * needs NO groupBy(term, doc_id) shuffle (at 10^12 docs that shuffle
-    * would move the entire token stream). */
-  def analyze(pages: DataFrame, dict: SynonymDict,
-              mode: String = graft.analysis.Tokenizer.Text): DataFrame =
-    pages
-      // final "" fallback: a doc can legitimately MISS a field (null text
-      // AND no html in a fielded build) — it must analyze to an empty
-      // token array, not a null that NPEs the fragment builder
-      .withColumn("text",
-        coalesce(col("text"), extract_text(col("html")), lit("")))
-      .select(col("doc_id"), col("url"), col("warc_ts"), col("lang"),
-        col("text"), qube_tf(col("text"), dict, mode).as("tf_pairs"))
-      .withColumn("dl", // try_: an empty-field doc has an EMPTY tf array
-        coalesce(try_element_at(col("tf_pairs"), lit(1)).getField("dl"), lit(0)))
-
-  /** [[analyze]] when only `dl` is needed (the docstore pass): `qube_dl`
-    * counts the post-expansion tokens without building the per-term tf
-    * map — identical `dl` by the spec-pinned `docLen == tfPairs.dl`
-    * identity, measurably cheaper per doc. */
+  /** The docstore pass's analysis: byte-identical text per url
+    * (pre-extracted `text` reused when present, else `extract_text(html)`,
+    * else "" — a doc can legitimately MISS a field in a fielded build),
+    * then `qube_dl` counts the post-expansion tokens without building the
+    * per-term tf map `qube_tf` would — identical `dl` by the spec-pinned
+    * `docLen == tfPairs.dl` identity, measurably cheaper per doc. */
   private def analyzeDlOnly(pages: DataFrame, dict: SynonymDict,
                             mode: String): DataFrame =
     pages

@@ -1,6 +1,6 @@
 package graft.query
 
-import graft.analysis.{SynonymDict, Tokenizer}
+import graft.analysis.{Analyzer, SynonymDict, Tokenizer}
 import graft.functions.graftFunctions._
 import graft.index.IndexStore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -396,14 +396,13 @@ final class Searcher(
   def isClosePossible: Boolean = activeSearches.get == 0
   def isClosed: Boolean = closedFlag.get
 
-  /** Query analysis = the index-time chain (tokenize → uppercase →
-    * synonym expand) + dedup; term order fixed by sort for the
-    * deterministic score fold. Duplicate query terms collapse (documented
-    * simplification; golden model shares this contract). */
+  /** Query analysis = the index-time chain ([[graft.analysis.Analyzer]]:
+    * tokenize → uppercase → synonym expand) + dedup; term order fixed by
+    * sort for the deterministic score fold. Duplicate query terms
+    * collapse (documented simplification; golden model shares this
+    * contract). */
   def analyzeQuery(query: String): Seq[String] =
-    if (query == null) Seq.empty
-    else dict.expand(Tokenizer.tokenize(query, analyzerMode).toIndexedSeq)
-      .distinct.sorted
+    Analyzer.terms(query, analyzerMode, dict).distinct.sorted.toSeq
 
   final case class TermInfo(term: String, df: Long, idf: Double,
                             maxTf: Int, minDl: Int)
@@ -1214,18 +1213,16 @@ final class Searcher(
             else Double.NegativeInfinity
           } else {
             // restricted θ seed: the best term's exact contributions
-            // (same arithmetic shape as foldScores — a θ even one ulp
-            // above the true restricted kth could over-prune), restricted
-            // to the eligible docset, kth best
-            val bi = idfs.find(_.term == best).get
+            // (foldScores' own contribBase — a θ even one ulp above the
+            // true restricted kth could over-prune), restricted to the
+            // eligible docset, kth best
             val seedRows = postingsForTerms(Seq(best))
               .select(explode(vb_decode(col("blob"))).as("p"))
               .select(col("p.doc_id").as("doc_id"),
-                col("p.tf").as("tf"), col("p.dl").as("dl"))
-            val contrib = lit(bi.idf) * (col("tf") * lit(k1c + 1.0)) /
-              (col("tf") + lit(k1c) * (lit(1.0 - bc) + lit(bc) * col("dl") / lit(ac)))
+                col("p.tf").as("tf"), col("p.dl").as("dl"),
+                lit(idfMap(best)).as("idf"))
             val seed = restrict(seedRows)
-              .select(col("doc_id"), contrib.as("score"))
+              .select(col("doc_id"), contribBase.as("score"))
               .orderBy(col("score").desc, col("doc_id").asc).limit(n)
               .select("score").as[Double].collect()
             if (seed.length >= n) seed.last else Double.NegativeInfinity
@@ -1390,8 +1387,7 @@ final class Searcher(
   /** Phrase analysis: the index-time chain with ORDER AND DUPLICATES
     * preserved — the position contract is over the expanded stream. */
   def analyzePhrase(phrase: String): Seq[String] =
-    if (phrase == null) Seq.empty
-    else dict.expand(Tokenizer.tokenize(phrase, analyzerMode).toIndexedSeq)
+    Analyzer.terms(phrase, analyzerMode, dict).toSeq
 
   /** Phrase top-k (reference PhraseQuery over positional postings,
     * Indexer.java:713-714): a doc matches iff the analyzed phrase terms
@@ -1706,8 +1702,7 @@ final class Searcher(
       if (src.isEmpty) return emptyPage
       val text = src.head.getAs[String]("text")
       if (text == null) return emptyPage
-      val toks =
-        dict.expand(Tokenizer.tokenize(text, analyzerMode).toIndexedSeq)
+      val toks = Analyzer.terms(text, analyzerMode, dict)
       if (toks.isEmpty) return emptyPage
       val tf = toks.groupBy(identity).view.mapValues(_.size).toMap
       val infos = termIdfs(tf.keys.toSeq.sorted) // ONE probe
@@ -1740,9 +1735,7 @@ final class Searcher(
       val page = search(query, k, start, conjunctive, filter).collect()
       val terms = analyzeQuery(query).toSet
       val rows = page.map { r =>
-        val toks = dict.expand(
-          Tokenizer.tokenize(r.getAs[String]("text"), analyzerMode)
-            .toIndexedSeq)
+        val toks = Analyzer.terms(r.getAs[String]("text"), analyzerMode, dict)
         val p0 = toks.indexWhere(terms.contains)
         val (pos, snip) =
           if (p0 < 0) (null, null) // defensive: page rows always match
@@ -2066,11 +2059,25 @@ final class Searcher(
       case _ => new LruCache[Long, org.apache.spark.sql.Row](1024)
     }
 
+  /** Stored fields of `docIds` in input order: ONE cache lookup per
+    * distinct id (so the hit/miss counters mean what they say), misses
+    * fetched in one job; rows are served from a local map, never re-read
+    * from the LRU, so an eviction between `put` and return can't drop
+    * one. */
   def docCached(docIds: Seq[Long]): Seq[org.apache.spark.sql.Row] = {
-    val missing = docIds.filter(id => documentCache.get(id).isEmpty)
+    val rows = scala.collection.mutable.HashMap.empty[Long, org.apache.spark.sql.Row]
+    val missing = docIds.distinct.filter { id =>
+      documentCache.get(id) match {
+        case Some(r) => rows(id) = r; false
+        case None => true
+      }
+    }
     if (missing.nonEmpty)
-      doc(missing).collect().foreach(r => documentCache.put(r.getLong(0), r))
-    docIds.flatMap(id => documentCache.get(id))
+      doc(missing).collect().foreach { r =>
+        rows(r.getLong(0)) = r
+        documentCache.put(r.getLong(0), r)
+      }
+    docIds.flatMap(rows.get)
   }
 
   /** Search timeout (Q10, reference TimeLimitingCollector :822-825):

@@ -2,7 +2,7 @@ package graft
 
 import graft.analysis.{SynonymDict, Tokenizer}
 import graft.codec.VarByte
-import graft.golden.GoldenBM25
+import graft.golden.{GoldenBM25, StringAnalysis}
 import graft.index.IndexBuilder
 import graft.query.Searcher
 import org.scalacheck.Gen
@@ -64,9 +64,9 @@ class PropertySpec extends AnyFunSuite with SparkTestBase {
   test("synonyms: empty dict is identity; identity rules elided (∀)") {
     val tokenGen = Gen.listOf(Gen.oneOf("A", "B", "C", "D", "E")).map(_.toVector)
     forAllSeeded(tokenGen) { toks =>
-      assert(SynonymDict.empty.expand(toks) == toks)
+      assert(StringAnalysis.expand(SynonymDict.empty, toks) == toks)
       val d = SynonymDict.parse(Seq("a => a", "b => b"))
-      assert(d.isEmpty && d.expand(toks) == toks)
+      assert(d.isEmpty && StringAnalysis.expand(d, toks) == toks)
     }
   }
 
@@ -99,7 +99,7 @@ class PropertySpec extends AnyFunSuite with SparkTestBase {
       val rows = pages.collect().sortBy(_.getString(0))
       val docs = rows.zipWithIndex.map { case (r, i) =>
         GoldenBM25.Doc(i.toLong, r.getString(0), r.getString(4),
-          dict.expand(Tokenizer.tokenize(r.getString(3)).toIndexedSeq))
+          StringAnalysis.terms(r.getString(3), Tokenizer.Text, dict))
       }.toVector
       val golden = new GoldenBM25.Model(docs)
       val s = new Searcher(spark, root, dict)
@@ -146,7 +146,7 @@ class PropertySpec extends AnyFunSuite with SparkTestBase {
       val rows = pages.collect().sortBy(_.getString(0))
       val docs = rows.zipWithIndex.map { case (r, i) =>
         GoldenBM25.Doc(i.toLong, r.getString(0), r.getString(4),
-          Tokenizer.tokenize(r.getString(3)).toVector)
+          StringAnalysis.tokenize(r.getString(3)).toVector)
       }.toVector
       val golden = new GoldenBM25.Model(docs)
       val s = new Searcher(spark, root, SynonymDict.empty)

@@ -1,12 +1,13 @@
 package graft.analysis
 
+import graft.golden.StringAnalysis
 import org.scalatest.funsuite.AnyFunSuite
 
 class SynonymSpec extends AnyFunSuite {
 
   private def dict(lines: String*): SynonymDict = SynonymDict.parse(lines)
   private def run(d: SynonymDict, s: String): Seq[String] =
-    d.expand(Tokenizer.tokenize(s).toIndexedSeq)
+    StringAnalysis.terms(s, Tokenizer.Text, d)
 
   test("greedy earliest-longest match, scan resumes after matched span " +
     "(SynonymFilter.java parse(): inputSkipCount = matchInputLength)") {

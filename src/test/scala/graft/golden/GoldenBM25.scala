@@ -24,7 +24,7 @@ object GoldenBM25 {
     WebtextGen.pages(seed, n)
       .map { p =>
         val text = if (p.text != null) p.text else TextExtract.extractText(p.html)
-        (p.url, p.lang, dict.expand(Tokenizer.tokenize(text).toIndexedSeq))
+        (p.url, p.lang, StringAnalysis.terms(text, Tokenizer.Text, dict))
       }
       .sortBy(_._1)
       .zipWithIndex
@@ -80,7 +80,7 @@ object GoldenBM25 {
     }
 
     def analyze(query: String, dict: SynonymDict): Seq[String] =
-      dict.expand(Tokenizer.tokenize(query, mode).toIndexedSeq)
+      StringAnalysis.terms(query, mode, dict)
         .distinct.sorted
 
     /** All matches with scores; contributions summed in ascending term
@@ -152,7 +152,7 @@ object GoldenBM25 {
       * (positions are over the expanded token stream — the contract
       * shared with the engine's positional postings). */
     def analyzePhrase(phrase: String, dict: SynonymDict): Seq[String] =
-      dict.expand(Tokenizer.tokenize(phrase, mode).toIndexedSeq)
+      StringAnalysis.terms(phrase, mode, dict)
 
     /** DocIds with an ordered within-slop alignment: positions
       * p_0 < … < p_{m-1} with tokens(p_j) == terms(j) and every gap

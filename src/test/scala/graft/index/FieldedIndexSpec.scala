@@ -1,8 +1,8 @@
 package graft.index
 
 import graft.SparkTestBase
-import graft.analysis.{SynonymDict, Tokenizer}
-import graft.golden.GoldenBM25
+import graft.analysis.{Analyzer, SynonymDict, Tokenizer}
+import graft.golden.{GoldenBM25, StringAnalysis}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,12 +15,14 @@ class FieldedIndexSpec extends AnyFunSuite with SparkTestBase {
   private val N = 400
 
   test("keyword analyzer: split on non-alphanumerics, uppercase fold") {
-    assert(Tokenizer.tokenize("https://site-3.example/page/123", Tokenizer.Keyword)
+    def tokenize(s: String, mode: String) =
+      Analyzer.terms(s, mode, SynonymDict.empty)
+    assert(tokenize("https://site-3.example/page/123", Tokenizer.Keyword)
       .toSeq == Seq("HTTPS", "SITE", "3", "EXAMPLE", "PAGE", "123"))
-    assert(Tokenizer.tokenize("a_b c.d", Tokenizer.Keyword).toSeq ==
+    assert(tokenize("a_b c.d", Tokenizer.Keyword).toSeq ==
       Seq("A", "B", "C", "D"))
-    assert(Tokenizer.tokenize("", Tokenizer.Keyword).isEmpty)
-    intercept[IllegalArgumentException](Tokenizer.tokenize("x", "bogus"))
+    assert(tokenize("", Tokenizer.Keyword).isEmpty)
+    intercept[IllegalArgumentException](tokenize("x", "bogus"))
   }
 
   private lazy val reports: Map[String, IndexBuilder.BuildReport] = {
@@ -59,10 +61,10 @@ class FieldedIndexSpec extends AnyFunSuite with SparkTestBase {
   private lazy val goldenText = new GoldenBM25.Model(goldenDocs { p =>
     val text = if (p.text != null) p.text
       else graft.analysis.TextExtract.extractText(p.html)
-    Tokenizer.tokenize(text).toVector
+    StringAnalysis.tokenize(text).toVector
   })
   private lazy val goldenUrl = new GoldenBM25.Model(goldenDocs(p =>
-    Tokenizer.tokenize(p.url, Tokenizer.Keyword).toVector),
+    StringAnalysis.tokenize(p.url, Tokenizer.Keyword).toVector),
     mode = Tokenizer.Keyword)
 
   test("single-field search through the url field's keyword analyzer is " +

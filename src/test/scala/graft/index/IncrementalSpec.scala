@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import graft.SparkTestBase
 import graft.analysis.{SynonymDict, TextExtract, Tokenizer}
-import graft.golden.GoldenBM25
+import graft.golden.{GoldenBM25, StringAnalysis}
 import graft.query.Searcher
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
@@ -53,7 +53,7 @@ class IncrementalSpec extends AnyFunSuite with SparkTestBase {
     segments.flatMap { seg =>
       val docs = seg.map { p =>
         val text = if (p.text != null) p.text else TextExtract.extractText(p.html)
-        (p.url, p.lang, dict.expand(Tokenizer.tokenize(text).toIndexedSeq))
+        (p.url, p.lang, StringAnalysis.terms(text, Tokenizer.Text, dict))
       }.sortBy(_._1).zipWithIndex.map { case ((u, l, t), i) =>
         GoldenBM25.Doc(base + i, u, l, t)
       }

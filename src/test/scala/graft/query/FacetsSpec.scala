@@ -40,7 +40,7 @@ class FacetsSpec extends AnyFunSuite with SparkTestBase {
       val pages = WebtextGen.pages(11L, 300).map { p =>
         val text = if (p.text != null) p.text
           else graft.analysis.TextExtract.extractText(p.html)
-        (p.url, p.lang, graft.analysis.Tokenizer.tokenize(text).toSet)
+        (p.url, p.lang, graft.golden.StringAnalysis.tokenize(text).toSet)
       }
       val matched = pages.filter(_._3.contains("SPARK"))
       val host = (u: String) => u.replaceFirst("^[a-zA-Z]+://", "").takeWhile(_ != '/')
@@ -69,7 +69,7 @@ class FacetsSpec extends AnyFunSuite with SparkTestBase {
       val matchedCounts = WebtextGen.pages(11L, 300).flatMap { pg =>
         val text = if (pg.text != null) pg.text
           else graft.analysis.TextExtract.extractText(pg.html)
-        val toks = graft.analysis.Tokenizer.tokenize(text)
+        val toks = graft.golden.StringAnalysis.tokenize(text)
         if (toks.contains("SPARK")) Some(pg.lang -> toks.length.toDouble)
         else None
       }
@@ -125,8 +125,8 @@ class FacetsSpec extends AnyFunSuite with SparkTestBase {
       val pages = WebtextGen.pages(31L, 300).map { p =>
         val text = if (p.text != null) p.text
           else graft.analysis.TextExtract.extractText(p.html)
-        (p, graft.analysis.Tokenizer.tokenize(text).toSet,
-          graft.analysis.Tokenizer.tokenize(p.url, Tokenizer.Keyword).toSet)
+        (p, graft.golden.StringAnalysis.tokenize(text).toSet,
+          graft.golden.StringAnalysis.tokenize(p.url, Tokenizer.Keyword).toSet)
       }
       val matched = pages.filter(x =>
         x._2.contains("SPARK") && x._3.contains("EXAMPLE"))
@@ -157,7 +157,7 @@ class FacetsSpec extends AnyFunSuite with SparkTestBase {
       val dls = matched.map { x =>
         val text = if (x._1.text != null) x._1.text
           else graft.analysis.TextExtract.extractText(x._1.html)
-        graft.analysis.Tokenizer.tokenize(text).length.toDouble
+        graft.golden.StringAnalysis.tokenize(text).length.toDouble
       }
       val gotR = fsr.facetRangeSearch(qs, "dl", Seq(
           Facets.RangeSpec("lo", 0, 60),

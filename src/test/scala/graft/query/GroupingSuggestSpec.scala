@@ -20,7 +20,7 @@ class GroupingSuggestSpec extends AnyFunSuite with SparkTestBase {
     WebtextGen.pages(seed, n).map { p =>
       val text = if (p.text != null) p.text
         else graft.analysis.TextExtract.extractText(p.html)
-      (p, graft.analysis.Tokenizer.tokenize(text))
+      (p, graft.golden.StringAnalysis.tokenize(text))
     }
 
   test("index-integrated range facets, drill-sideways and grouped top-k " +

@@ -144,8 +144,8 @@ class PhraseSpec extends AnyFunSuite with SparkTestBase {
           val text = if (p.text != null) p.text
             else graft.analysis.TextExtract.extractText(p.html)
           GoldenBM25.Doc(base + i,
-            u, p.lang, dict.expand(
-              graft.analysis.Tokenizer.tokenize(text).toIndexedSeq))
+            u, p.lang, graft.golden.StringAnalysis.terms(text,
+              graft.analysis.Tokenizer.Text, dict))
         }
       val g = new GoldenBM25.Model(docsOf(seg1, 0L) ++ docsOf(seg2, n1.toLong))
       val phrases = Seq("spark index", "index build", "search")

@@ -40,6 +40,20 @@ class ServingSpec extends AnyFunSuite with SparkTestBase {
     assert(searcher.documentCache.hits >= h0 + ids.size)
   }
 
+  test("document LRU counts one lookup per id: k unseen ids are k misses " +
+    "and 0 hits, a repeat call is k hits") {
+    val s = new Searcher(spark, root) // fresh doc LRU
+    try {
+      val ids = Seq(123L, 5L, 17L)
+      assert(s.docCached(ids).map(_.getLong(0)) == ids)
+      assert(s.documentCache.misses == ids.size)
+      assert(s.documentCache.hits == 0)
+      assert(s.docCached(ids).map(_.getLong(0)) == ids)
+      assert(s.documentCache.hits == ids.size)
+      assert(s.documentCache.misses == ids.size)
+    } finally s.close()
+  }
+
   test("search timeout: generous deadline completes, ~zero deadline " +
     "cancels (Q10)") {
     val ok = searcher.searchWithTimeout("spark", 5, timeoutMs = 120000)

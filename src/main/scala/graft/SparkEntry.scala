@@ -778,15 +778,18 @@ object SparkEntry {
       import graft.streaming.EventAggregates
       import s.implicits._
       import scala.jdk.CollectionConverters._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+      // the stream runs on its OWN session (same SparkContext, own conf
+      // and temp views): its shuffle width below must not leak into
+      // other queries on the caller's session while the stream runs
+      val ss = s.newSession()
+      implicit val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
       val gapMs = 86400000L // 24h sessions over the 30-day events table
       val evDs = t(s, dir, "events")
         .select("event_id", "ts", "user_id", "event_type", "value")
         .as[EventAggregates.Event]
       val in = MemoryStream[EventAggregates.Event]
-      val sessions = EventAggregates.sessionize(s, in.toDS(), gapMs = gapMs)
+      val sessions = EventAggregates.sessionize(ss, in.toDS(), gapMs = gapMs)
       val sink = "q_sessionize_sink"
-      if (s.catalog.tableExists(sink)) s.catalog.dropTempView(sink)
       // scale-adaptive state partitioning: a stream's state-store
       // partition count is a per-query sizing decision (pinned at first
       // checkpoint in production); derive it from input volume — one
@@ -796,15 +799,13 @@ object SparkEntry {
       // open/commits for a handful of keys. Results are partitioning-
       // independent (per-key state, explicit in-key sort).
       val nEvents = t(s, dir, "events").count()
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
+      val sessionParts = s.conf.get("spark.sql.shuffle.partitions").toLong
       val streamParts =
-        math.max(1L, math.min(prevParts.toLong, nEvents / 50000L + 1L))
-      s.conf.set("spark.sql.shuffle.partitions", streamParts.toString)
-      val q =
-        try sessions.writeStream.format("memory").queryName(sink)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-          .start()
-        finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+        math.max(1L, math.min(sessionParts, nEvents / 50000L + 1L))
+      ss.conf.set("spark.sql.shuffle.partitions", streamParts.toString)
+      val q = sessions.writeStream.format("memory").queryName(sink)
+        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
+        .start()
       try {
         // BOUNDED feed: the table streams through the driver one
         // ts-ordered chunk at a time, and processAllAvailable between
@@ -836,7 +837,7 @@ object SparkEntry {
           new java.sql.Timestamp(flushTs + 3600000L), -1L, "flush", 0.0))
         q.processAllAvailable()
         // ms, not µs: the state buffer is Timestamp.getTime-granular
-        val rows = s.table(sink).filter(col("user_id") >= 0)
+        val rows = ss.table(sink).filter(col("user_id") >= 0)
           .select(col("user_id"), col("n_events"),
             unix_millis(col("first_ts")).as("session_start"),
             unix_millis(col("last_ts")).as("session_end"),

@@ -68,7 +68,9 @@ object FieldedIndex {
       .drop("__tie")
     val sharedPath = s"$root/_build/idpages"
     idPages.write.mode("overwrite").parquet(sharedPath)
-    (spark.read.parquet(sharedPath), (System.nanoTime() - t0) / 1000000)
+    // read back with the frame's own schema: no footer-inference job
+    (spark.read.schema(idPages.schema).parquet(sharedPath),
+      (System.nanoTime() - t0) / 1000000)
   }
 
   /** One field's pages shape out of the shared id-assigned frame. */
@@ -218,7 +220,8 @@ object FieldedIndex {
           IndexStore.Snapshot(snap.id + 1, snap.segments :+ seg,
             snap.tombstones, None)
         case (Some(batches), None) => // first maintained field: compute
-          val adv = IndexBuilder.advanceForAppend(spark, fr, snap, seg)
+          val adv = IndexBuilder.advanceForAppend(spark, fr, snap,
+            reports(f.name))
           fannedDead = Some(adv.dead.get.diff(batches).headOption)
           adv
         case (Some(batches), Some(batchName)) => // fan the byte copy

@@ -143,7 +143,9 @@ object IndexBuilder {
     *
     * Null/empty labels get the reference's sentinel
     * (UNSUPPORTED_FACET_VALUE, Indexer.java:319-325) — applied to every
-    * label and path level, so specs never need their own null handling. */
+    * label and path level, so specs never need their own null handling.
+    * Labels and path levels are stored as strings (the sidecar layout
+    * pinned in [[IndexStore.facetsSchema]]). */
   final case class FacetSpec(dim: String,
                              label: org.apache.spark.sql.Column,
                              path: Seq[org.apache.spark.sql.Column] = Nil,
@@ -169,8 +171,10 @@ object IndexBuilder {
   /** Facet sidecar rows `(doc_id, dim, label, path)` for one spec over
     * the docstore frame. */
   private def facetRows(docstore: DataFrame, sp: FacetSpec): DataFrame = {
-    def sent(c: org.apache.spark.sql.Column) =
+    def sent(c0: org.apache.spark.sql.Column) = {
+      val c = c0.cast("string")
       when(c.isNull || c === lit(""), lit(FacetSentinel)).otherwise(c)
+    }
     if (sp.multiValue)
       docstore
         .select(col("doc_id"), explode_outer(sp.label).as("__v"))
@@ -193,9 +197,13 @@ object IndexBuilder {
   final case class PostingRow(part: Int, term: String, df_local: Long,
                               max_tf: Int, min_dl: Int, blob: Array[Byte])
 
+  /** `urlRange` = the (min, max) url of a built segment's docstore,
+    * observed during its write (None for an empty segment, and for
+    * reports of compaction passes, which do not observe it). */
   final case class BuildReport(segment: String, docCount: Long, termCount: Long,
                                postingRows: Long, wallMs: Long,
-                               phases: Seq[(String, Long)] = Seq.empty)
+                               phases: Seq[(String, Long)] = Seq.empty,
+                               urlRange: Option[(String, String)] = None)
 
   /** Growable (docId, tf, dl[, positions]) buffer — the per-(term, shard)
     * RAM posting buffer of the map-side build (the analog of Lucene's
@@ -576,7 +584,20 @@ object IndexBuilder {
     * `doc_id`. `tieCol` names the (string) column that breaks exact
     * (url, warc_ts) ties — the single-field build passes `text`; the
     * fielded build passes the field texts concatenated in field-name
-    * order, so all fields agree on one winner row. */
+    * order, so all fields agree on one winner row.
+    *
+    * Besides the one range shuffle, it runs a sizing `count()` over
+    * `df0` (it picks the range-partition count). That is row-group
+    * metadata for a parquet source and a column-pruned pass for the
+    * generator, but an input whose derived columns resist pruning runs
+    * its whole pipeline once more for it.
+    *
+    * Contract on the returned frame: every emitted row is ONE aliased
+    * `JoinedRow` over the sorter's reused row, valid only until the
+    * consumer pulls the next row. Consume it one row at a time (the
+    * parquet writers here do) and WRITE it before any reuse — never
+    * cache, collect or buffer its rows un-copied, or they all alias the
+    * last one. [[FieldedIndex]] writes it before its per-field reads. */
   def assignDocIdsDf(spark: SparkSession, df0: DataFrame, baseDocId: Long,
                      rangeParts: Int, tieCol: String): DataFrame = {
     // normalize warc_ts to session-tz TIMESTAMP: tables written by other
@@ -737,26 +758,33 @@ object IndexBuilder {
     // stable materialization: every later pass derives from this parquet
     // (text already extracted), so nothing row-heavy is ever cached in
     // memory and the raw-page cache can be dropped right here.
-    // Collection stats (N, Σdl, max id) are OBSERVED during the write —
-    // at 10^12 docs a separate stats agg would re-scan the docstore; as
+    // Collection stats (N, Σdl, max id) and the batch's url range (the
+    // append's superseded-id scan bounds) are OBSERVED during the write —
+    // at 10^12 docs a separate agg would re-scan the docstore; as
     // observed metrics they cost nothing.
     val docObs = org.apache.spark.sql.Observation()
     analyzeDlOnly(idPages, dict, cfg.analyzer)
       .select(col("doc_id"), col("url"), col("warc_ts"), col("lang"),
         col("text"), col("dl"))
       .observe(docObs, count(lit(1)).as("cnt"),
-        sum(col("dl").cast("long")).as("sdl"), max(col("doc_id")).as("mx"))
+        sum(col("dl").cast("long")).as("sdl"), max(col("doc_id")).as("mx"),
+        min(col("url")).as("lo_url"), max(col("url")).as("hi_url"))
       .write.mode("overwrite").options(IndexStore.docstoreWriteOptions)
       .parquet(IndexStore.docstorePath(root, seg))
     lap("analyze_docstore")
 
-    val docstore = spark.read.parquet(IndexStore.docstorePath(root, seg))
+    val docstore = IndexStore.readDocstore(spark, root, seg)
     // the docstore write above has completed, so its observed metrics
     // are available now; captured once — the stats row below reuses it
     val docObsRow = docObs.get
     val builtDocs = docObsRow.get("cnt") match {
       case Some(n: Long) => n
       case _ => 0L
+    }
+    // null on an empty batch (min/max over no rows)
+    val urlRange = (docObsRow.get("lo_url"), docObsRow.get("hi_url")) match {
+      case (Some(lo: String), Some(hi: String)) => Some((lo, hi))
+      case _ => None
     }
     // Large corpora derive term_stats from the WRITTEN posting blobs
     // (df/bounds are stored per row, ttf is one VarByte.sumTf walk) and
@@ -830,7 +858,7 @@ object IndexBuilder {
     // single posting partition holds an entire head term.
     val headSet: Set[String] =
       if (!sampledStats)
-        spark.read.parquet(IndexStore.termStatsPath(root, seg))
+        IndexStore.readTermStats(spark, root, seg)
           .filter(col("df") >= cfg.saltDf)
           .orderBy(col("df").desc).limit(cfg.maxSaltedTerms)
           .select("term").collect().map(_.getString(0)).toSet
@@ -1130,7 +1158,7 @@ object IndexBuilder {
     val postingRows = manifestRows.map(_.rows).sum // no extra job
     BuildReport(seg, docCount, termCount, postingRows,
       (System.nanoTime() - t0) / 1000000,
-      phases.result())
+      phases.result(), urlRange)
   }
 
   /** FULL build (reference `OpenMode.CREATE`, Indexer.java:199-204): one
@@ -1152,25 +1180,26 @@ object IndexBuilder {
   }
 
   /** Next APPEND doc_id base for a root: max `id_ceiling` across the
-    * snapshot's segments (stats rows — no docstore scan). NOT Σ
-    * doc_count: a compacted segment keeps original ids with gaps, so its
-    * ceiling exceeds its live count. Legacy segments without the column
-    * fall back to a column-pruned max(doc_id) scan. */
+    * snapshot's segments, from ONE Spark job over every segment's stats
+    * row ([[IndexStore.readSegmentStats]] — no docstore scan, and the job
+    * count does not grow with the segment count). NOT Σ doc_count: a
+    * compacted segment keeps original ids with gaps, so its ceiling
+    * exceeds its live count. A legacy segment whose stats lack the
+    * column falls back to a column-pruned max(doc_id) scan of its
+    * docstore. */
   def nextAppendBase(spark: SparkSession, root: String,
-                     snap: IndexStore.Snapshot): Long =
+                     snap: IndexStore.Snapshot): Long = {
+    val stats = IndexStore.readSegmentStats(spark, root, snap.segments)
     snap.segments.map { s =>
-      val st = spark.read.parquet(IndexStore.statsPath(root, s))
-      if (st.columns.contains("id_ceiling"))
-        st.agg(max("id_ceiling")).head() match {
-          case r if r.isNullAt(0) => 0L
-          case r => r.getLong(0)
-        }
-      else spark.read.parquet(IndexStore.docstorePath(root, s))
-        .agg(max("doc_id")).head() match {
-          case r if r.isNullAt(0) => 0L
-          case r => r.getLong(0) + 1L
-        }
+      stats(s).idCeiling.getOrElse {
+        IndexStore.readDocstore(spark, root, s)
+          .agg(max("doc_id")).head() match {
+            case r if r.isNullAt(0) => 0L
+            case r => r.getLong(0) + 1L
+          }
+      }
     }.max
+  }
 
   /** doc_ids superseded by the arrival of segment `newSeg`: for each url
     * present in the new segment, every doc across old segments AND the
@@ -1179,26 +1208,24 @@ object IndexBuilder {
     * INCOMING doc is older than an existing version and is dead on
     * arrival). The old-segment scan is column-pruned to 3 narrow
     * columns and semi-joined to the batch's urls before the window, so
-    * the shuffle is O(matched urls) = O(batch), never O(corpus). */
+    * the shuffle is O(matched urls) = O(batch), never O(corpus).
+    *
+    * `loUrl`/`hiUrl` = the batch's url range, observed during the new
+    * segment's docstore write ([[BuildReport.urlRange]]) and pushed into
+    * every old-docstore scan: docstores are written in url sort order,
+    * so parquet row-group url stats prune hard when a micro-batch
+    * clusters by url — without it a long-running stream's per-append
+    * scan cost is O(corpus) even for a batch touching one url range. (A
+    * batch spanning the whole url space degrades to the full
+    * column-pruned scan, which the semi-join then shrinks.) */
   private def supersededByAppend(spark: SparkSession, root: String,
-                                 oldSegments: Seq[String],
-                                 newSeg: String): DataFrame = {
+                                 oldSegments: Seq[String], newSeg: String,
+                                 loUrl: String, hiUrl: String): DataFrame = {
     val cols = Seq("doc_id", "url", "warc_ts")
-    val newDocs = spark.read.parquet(IndexStore.docstorePath(root, newSeg))
+    val newDocs = IndexStore.readDocstore(spark, root, newSeg)
       .select(cols.map(col): _*)
-    // [minUrl, maxUrl] of the batch, pushed into every old-docstore scan:
-    // docstores are written in url sort order, so parquet row-group url
-    // stats prune hard when a micro-batch clusters by url — without it a
-    // long-running stream's per-append scan cost is O(corpus) even for a
-    // batch touching one url range. (One tiny agg over the just-written
-    // batch segment; a batch spanning the whole url space degrades to
-    // the full column-pruned scan, which the semi-join then shrinks.)
-    val r = newDocs.agg(min("url"), max("url")).head()
-    if (r.isNullAt(0)) // empty batch: nothing can be superseded
-      return spark.range(0).select(col("id").as("doc_id"))
-    val (loUrl, hiUrl) = (r.getString(0), r.getString(1))
     val oldDocs = oldSegments.map(s =>
-        spark.read.parquet(IndexStore.docstorePath(root, s))
+        IndexStore.readDocstore(spark, root, s)
           .select(cols.map(col): _*)
           .where(col("url").between(loUrl, hiUrl)))
       .reduce(_ unionByName _)
@@ -1211,20 +1238,27 @@ object IndexBuilder {
       .filter(col("__rn") > 1).select("doc_id")
   }
 
-  /** Advance `snap` for appended segment `newSeg`, maintaining the
-    * superseded-id sidecar when the root has one (an empty batch writes
-    * nothing — streams of fresh urls accumulate zero batches). A legacy
-    * root (`dead = None`) stays legacy: its Searcher keeps the window
+  /** Advance `snap` for the segment `built` appended, maintaining the
+    * superseded-id sidecar when the root has one. An empty batch (no
+    * observed url range) writes no batch at all, and a batch that
+    * supersedes nothing is written but left out of the snapshot —
+    * streams of fresh urls accumulate zero batches. A legacy root
+    * (`dead = None`) stays legacy: its Searcher keeps the window
     * fallback, and a [[merge]]/[[mergeCompact]] upgrades it. The
     * returned snapshot is NOT yet written — the caller commits it. */
   private[graft] def advanceForAppend(spark: SparkSession, root: String,
                                       snap: IndexStore.Snapshot,
-                                      newSeg: String): IndexStore.Snapshot = {
+                                      built: BuildReport): IndexStore.Snapshot = {
+    val newSeg = built.segment
     val dead = snap.dead.map { batches =>
-      val name = f"dead-${snap.id + 1}%06d"
-      val n = IndexStore.writeDeadIdsDf(spark, root, name,
-        supersededByAppend(spark, root, snap.segments, newSeg))
-      if (n == 0L) batches else batches :+ name
+      built.urlRange match {
+        case None => batches // empty batch: nothing can be superseded
+        case Some((lo, hi)) =>
+          val name = f"dead-${snap.id + 1}%06d"
+          val n = IndexStore.writeDeadIdsDf(spark, root, name,
+            supersededByAppend(spark, root, snap.segments, newSeg, lo, hi))
+          if (n == 0L) batches else batches :+ name
+      }
     }
     IndexStore.Snapshot(snap.id + 1, snap.segments :+ newSeg,
       snap.tombstones, dead)
@@ -1246,7 +1280,7 @@ object IndexBuilder {
     val seg = f"seg-${snap.id + 1}%06d"
     val report = buildSegment(spark, pages, dict, root, seg, nextBase, cfg, inputSnapshot)
     IndexStore.writeSnapshot(spark, root,
-      advanceForAppend(spark, root, snap, seg))
+      advanceForAppend(spark, root, snap, report))
     report
   }
 
@@ -1265,7 +1299,7 @@ object IndexBuilder {
       .getOrElse(sys.error(s"no snapshot at $root"))
     val src = jsonByUrl.toDF("url", "json")
     snap.segments.foreach { seg =>
-      val ds = spark.read.parquet(IndexStore.docstorePath(root, seg))
+      val ds = IndexStore.readDocstore(spark, root, seg)
         .select("doc_id", "url")
       graft.pipeline.JsonFields
         .flatten(ds.join(src, Seq("url")).select("doc_id", "json"),
@@ -1332,8 +1366,8 @@ object IndexBuilder {
           .filter(graft.codec.VarByte.SupportedVersions.contains)).max)
       case None => cfg
     }).copy(buildFacets = false, facetSpecs = Nil)
-    val all = snap.segments.map(s =>
-      spark.read.parquet(IndexStore.docstorePath(root, s))).reduce(_ unionByName _)
+    val all = snap.segments.map(IndexStore.readDocstore(spark, root, _))
+      .reduce(_ unionByName _)
     val live =
       IndexStore.readTombstonesDf(spark, root, snap.tombstones) match {
         case None => all
@@ -1364,24 +1398,26 @@ object IndexBuilder {
     // carry the sidecars across the doc_id reassignment: old winner
     // doc_id → url → new doc_id (one equi-join chain per sidecar; the
     // losers' and tombstoned docs' rows drop out with the winners join)
-    def remapSidecar(pathOf: (String, String) => String): Unit = {
+    def remapSidecar(pathOf: (String, String) => String,
+                     read: String => DataFrame): Unit = {
       val f = IndexStore.fs(spark, root)
       val present = snap.segments.forall(s =>
         f.exists(new org.apache.hadoop.fs.Path(pathOf(root, s))))
       if (!present) return
-      val old = snap.segments.map(s => spark.read.parquet(pathOf(root, s)))
+      val old = snap.segments.map(read)
         .reduce(_ unionByName _).withColumnRenamed("doc_id", "__old_id")
       val dataCols = old.columns.filter(_ != "__old_id").toSeq
       val winnerIds = winners.select(col("doc_id").as("__old_id"), col("url"))
-      val newIds = spark.read.parquet(IndexStore.docstorePath(root, seg))
+      val newIds = IndexStore.readDocstore(spark, root, seg)
         .select("doc_id", "url")
       old.join(winnerIds, Seq("__old_id"))
         .join(newIds, Seq("url"))
         .select("doc_id", dataCols: _*)
         .write.mode("overwrite").parquet(pathOf(root, seg))
     }
-    remapSidecar(IndexStore.facetsPath)
-    remapSidecar(IndexStore.jsonFieldsPath)
+    remapSidecar(IndexStore.facetsPath, IndexStore.readFacets(spark, root, _))
+    remapSidecar(IndexStore.jsonFieldsPath,
+      s => spark.read.parquet(IndexStore.jsonFieldsPath(root, s)))
 
     // single fresh segment: no superseded docs survive, and a LEGACY
     // root upgrades to sidecar-maintained here (the rebuild is the
@@ -1466,11 +1502,8 @@ object IndexBuilder {
     // BuildReport — re-reading per pass would issue O(segments × passes)
     // tiny driver jobs just for tier selection
     val sizes = scala.collection.mutable.Map.empty[String, Long]
-    if (ok) snap.segments.foreach { s =>
-      val c = spark.read.parquet(IndexStore.statsPath(root, s))
-        .agg(sum("doc_count")).head()
-      sizes(s) = if (c.isNullAt(0)) 0L else c.getLong(0)
-    }
+    if (ok) IndexStore.readSegmentStats(spark, root, snap.segments)
+      .foreach { case (s, st) => sizes(s) = st.docCount }
     while (ok && snap.segments.size > tierFanin) {
       val tier = snap.segments.map(s => s -> sizes.getOrElse(s, 0L))
         .sortBy { case (s, n) => (n, s) }
@@ -1531,8 +1564,7 @@ object IndexBuilder {
                             maxBroadcastDeadIds: Long)
       : Option[Array[Long]] = {
     import spark.implicits._
-    val allDocs = snap.segments.map(s =>
-        spark.read.parquet(IndexStore.docstorePath(root, s)))
+    val allDocs = snap.segments.map(IndexStore.readDocstore(spark, root, _))
       .reduce(_ unionByName _)
     val w = Window.partitionBy("url")
       .orderBy(col("warc_ts").desc, col("doc_id").desc)
@@ -1600,8 +1632,7 @@ object IndexBuilder {
     // rebuild [[merge]].
     val segVer = sc0.formatVersion
 
-    val targetDocs = targets.map(s =>
-        spark.read.parquet(IndexStore.docstorePath(root, s)))
+    val targetDocs = targets.map(IndexStore.readDocstore(spark, root, _))
       .reduce(_ unionByName _)
 
     // the dead set is GLOBAL (window over every segment's docstore +
@@ -1725,8 +1756,7 @@ object IndexBuilder {
     // written schema is the pinned postings layout, which carries no ttf)
     val termStats =
       if (deadCount == 0)
-        targets.map(s =>
-            spark.read.parquet(IndexStore.termStatsPath(root, s)))
+        targets.map(IndexStore.readTermStats(spark, root, _))
           .reduce(_ unionByName _)
           .groupBy("term").agg(sum("df").as("df"), sum("ttf").as("ttf"),
             max("max_tf").as("max_tf"), min("min_dl").as("min_dl"))
@@ -1760,20 +1790,22 @@ object IndexBuilder {
     lap("docstore_stats")
 
     // sidecars ride along unchanged (ids are stable) minus dead rows
-    def carrySidecar(pathOf: (String, String) => String): Unit = {
+    def carrySidecar(pathOf: (String, String) => String,
+                     read: String => DataFrame): Unit = {
       val f = IndexStore.fs(spark, root)
       val present = targets.forall(s =>
         f.exists(new org.apache.hadoop.fs.Path(pathOf(root, s))))
       if (!present) return
-      val old = targets.map(s => spark.read.parquet(pathOf(root, s)))
+      val old = targets.map(read)
         .reduce(_ unionByName _)
       val live =
         if (deadCount == 0) old
         else old.join(broadcast(deadIdsDf), Seq("doc_id"), "left_anti")
       live.write.mode("overwrite").parquet(pathOf(root, seg))
     }
-    carrySidecar(IndexStore.facetsPath)
-    carrySidecar(IndexStore.jsonFieldsPath)
+    carrySidecar(IndexStore.facetsPath, IndexStore.readFacets(spark, root, _))
+    carrySidecar(IndexStore.jsonFieldsPath,
+      s => spark.read.parquet(IndexStore.jsonFieldsPath(root, s)))
     lap("sidecars")
 
     val wallMs0 = (System.nanoTime() - t0) / 1000000

@@ -39,6 +39,8 @@ object IndexCheck {
     import spark.implicits._
     val snap = IndexStore.readLatestSnapshot(spark, root)
       .getOrElse(sys.error(s"no snapshot at $root"))
+    // every segment's stats row in one job
+    val segStats = IndexStore.readSegmentStats(spark, root, snap.segments)
 
     val perSegment = snap.segments.map { seg =>
       val cfgOpt = IndexStore.readSegmentConfig(spark, root, seg)
@@ -135,7 +137,7 @@ object IndexCheck {
       // 3a: term_stats.df vs Σ df_local
       val fromBlobs = postings.toDF()
         .groupBy("term").agg(sum("df_local").as("df_blobs"))
-      val stDf = spark.read.parquet(IndexStore.termStatsPath(root, seg))
+      val stDf = IndexStore.readTermStats(spark, root, seg)
         .select(col("term"), col("df"))
       val dfIssues = stDf.join(fromBlobs, Seq("term"), "full_outer")
         .filter(not(col("df") <=> col("df_blobs")))
@@ -150,28 +152,24 @@ object IndexCheck {
       // see identical partitioning (invariant 1); a boundary re-sample
       // between them would overlap per-partition id ranges, which no
       // other audit catches (row counts and stats still agree)
-      val ds = spark.read.parquet(IndexStore.docstorePath(root, seg))
-      val stats = spark.read.parquet(IndexStore.statsPath(root, seg))
+      val ds = IndexStore.readDocstore(spark, root, seg)
       val agg = ds.agg(count(lit(1)), max("doc_id"),
         countDistinct("doc_id")).head()
       val (nDocs, maxId) = (agg.getLong(0),
         if (agg.isNullAt(1)) -1L else agg.getLong(1))
       val nDistinct = agg.getLong(2)
-      val srow = stats.agg(sum("doc_count"),
-        if (stats.columns.contains("id_ceiling")) max("id_ceiling")
-        else lit(null).cast("long")).head()
+      val st = segStats(seg)
       val statIssues = Seq.newBuilder[Issue]
-      val statCount = if (srow.isNullAt(0)) 0L else srow.getLong(0)
-      if (statCount != nDocs)
+      if (st.docCount != nDocs)
         statIssues += Issue(seg, -1, "",
-          s"stats.doc_count=$statCount but docstore has $nDocs rows")
+          s"stats.doc_count=${st.docCount} but docstore has $nDocs rows")
       if (nDistinct != nDocs)
         statIssues += Issue(seg, -1, "",
           s"docstore holds $nDocs rows but only $nDistinct distinct " +
             "doc_ids (duplicate assignment)")
-      if (!srow.isNullAt(1) && srow.getLong(1) <= maxId)
+      st.idCeiling.filter(_ <= maxId).foreach(c =>
         statIssues += Issue(seg, -1, "",
-          s"id_ceiling=${srow.getLong(1)} <= max doc_id $maxId")
+          s"id_ceiling=$c <= max doc_id $maxId"))
 
       // 3c: orphan posting doc_ids (ghost hits) — one distributed
       // anti-join of the exploded posting ids against the docstore.

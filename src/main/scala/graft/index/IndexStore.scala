@@ -3,7 +3,9 @@ package graft.index
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types._
 
 /** Physical index layout + snapshot/manifest bookkeeping ("Iceberg-
   * emulated", SURVEY.md §0.3): partitioned Parquet tables plus JSON
@@ -106,24 +108,85 @@ object IndexStore {
   def statsPath(root: String, seg: String) = s"${segmentDir(root, seg)}/stats"
   def manifestPath(root: String, seg: String) = s"${segmentDir(root, seg)}/manifest.jsonl"
 
-  /** THE pinned postings schema: an empty segment's partitioned dir has
-    * no parquet footers to infer from (S7 create-empty-index), and every
-    * reader (Searcher, posting-level merge) must agree on one layout —
-    * this is the single copy. */
-  val postingsSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("term",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("df_local",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("max_tf",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("min_dl",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("blob",
-        org.apache.spark.sql.types.BinaryType),
-      org.apache.spark.sql.types.StructField("part",
-        org.apache.spark.sql.types.IntegerType)))
+  // --- pinned table schemas + readers ---
+  //
+  // Every engine-written table is read through the readers below, each
+  // with its layout pinned here. A schema-less `spark.read.parquet` infers
+  // the schema from a parquet footer, and that inference is itself a
+  // one-task Spark job — paid per table per segment on every append,
+  // compaction and searcher open. Each schema is the single copy of its
+  // table's layout: a writer that changes a column changes it here too.
+
+  private def schemaOf(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (n, t) => StructField(n, t) })
+
+  /** THE pinned postings schema. It also serves the empty segment (S7
+    * create-empty-index), whose partitioned dir has no parquet footers
+    * to infer from. */
+  val postingsSchema: StructType = schemaOf("term" -> StringType,
+    "df_local" -> LongType, "max_tf" -> IntegerType,
+    "min_dl" -> IntegerType, "blob" -> BinaryType, "part" -> IntegerType)
+
+  /** Row store: the build's analysis pass writes it, compaction copies it. */
+  val docstoreSchema: StructType = schemaOf("doc_id" -> LongType,
+    "url" -> StringType, "warc_ts" -> TimestampType, "lang" -> StringType,
+    "text" -> StringType, "dl" -> IntegerType)
+
+  val termStatsSchema: StructType = schemaOf("term" -> StringType,
+    "df" -> LongType, "ttf" -> LongType, "max_tf" -> IntegerType,
+    "min_dl" -> IntegerType)
+
+  /** One row per segment ([[writeStatsFromObservation]]). A legacy stats
+    * file without `id_ceiling` reads that column as null. */
+  val statsSchema: StructType = schemaOf("doc_count" -> LongType,
+    "sum_dl" -> LongType, "avgdl" -> DoubleType, "id_ceiling" -> LongType)
+
+  /** Facet sidecar: labels and path levels are written as strings. */
+  val facetsSchema: StructType = schemaOf("doc_id" -> LongType,
+    "dim" -> StringType, "label" -> StringType,
+    "path" -> ArrayType(StringType))
+
+  val tombstonesSchema: StructType = schemaOf("url" -> StringType)
+  val deadIdsSchema: StructType = schemaOf("doc_id" -> LongType)
+
+  private def readPinned(spark: SparkSession, schema: StructType,
+                         path: String): DataFrame =
+    spark.read.schema(schema).parquet(path)
+
+  def readDocstore(spark: SparkSession, root: String, seg: String): DataFrame =
+    readPinned(spark, docstoreSchema, docstorePath(root, seg))
+
+  def readTermStats(spark: SparkSession, root: String, seg: String): DataFrame =
+    readPinned(spark, termStatsSchema, termStatsPath(root, seg))
+
+  def readFacets(spark: SparkSession, root: String, seg: String): DataFrame =
+    readPinned(spark, facetsSchema, facetsPath(root, seg))
+
+  /** A segment's stats row. `idCeiling` is None for a legacy segment
+    * whose stats predate the column. */
+  final case class SegmentStats(docCount: Long, sumDl: Long,
+                                idCeiling: Option[Long])
+
+  /** Stats of every named segment in ONE Spark job: the per-segment
+    * reads are unioned and their (tiny) rows collected, and rows are
+    * folded on the driver (sum of counts, max ceiling), so the job count
+    * does not grow with the number of segments. */
+  def readSegmentStats(spark: SparkSession, root: String,
+                       segs: Seq[String]): Map[String, SegmentStats] =
+    if (segs.isEmpty) Map.empty
+    else {
+      val rows = segs.map(s =>
+          readPinned(spark, statsSchema, statsPath(root, s))
+            .select(lit(s), col("doc_count"), col("sum_dl"), col("id_ceiling")))
+        .reduce(_ union _)
+        .collect()
+      val bySeg = rows.groupBy(_.getString(0))
+      segs.map { s =>
+        val rs = bySeg.getOrElse(s, Array.empty[Row])
+        def longs(i: Int) = rs.filterNot(_.isNullAt(i)).map(_.getLong(i))
+        s -> SegmentStats(longs(1).sum, longs(2).sum, longs(3).maxOption)
+      }.toMap
+    }
 
   /** Write options for EVERY postings write (build, rebuild merge via
     * the build path, compact merge). Posting rows carry multi-MB blobs,
@@ -197,15 +260,15 @@ object IndexStore {
     (docCount, sumDl, idCeiling)
   }
 
-  /** Segment postings, or an empty pinned-schema frame for a segment
-    * whose partitioned dir has no footers (empty corpus). */
+  /** Segment postings read with the pinned [[postingsSchema]] (an empty
+    * corpus's footer-less dir reads as an empty frame), or an empty
+    * frame of that schema when the dir is missing. */
   def readPostingsOrEmpty(spark: SparkSession, root: String,
-                          seg: String): org.apache.spark.sql.DataFrame =
-    try spark.read.parquet(postingsPath(root, seg))
+                          seg: String): DataFrame =
+    try readPinned(spark, postingsSchema, postingsPath(root, seg))
     catch {
       case _: org.apache.spark.sql.AnalysisException =>
-        spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        spark.createDataFrame(java.util.Collections.emptyList[Row](),
           postingsSchema)
     }
 
@@ -414,7 +477,7 @@ object IndexStore {
     // the count only for its broadcast-vs-shuffle size gate, and reading
     // it back here saves them a count() job per lifecycle op
     val obs = org.apache.spark.sql.Observation()
-    urls.toDF("url")
+    urls.toDF("url").select(col("url").cast(StringType))
       .observe(obs, org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("cnt"))
       .write.mode("overwrite")
@@ -449,7 +512,7 @@ object IndexStore {
     val dfs = names.flatMap { n =>
       val dir = new Path(s"$root/tombstones/$n")
       val txt = new Path(s"$root/tombstones/$n.txt")
-      if (f.exists(dir)) Some(spark.read.parquet(dir.toString).toDF("url"))
+      if (f.exists(dir)) Some(readPinned(spark, tombstonesSchema, dir.toString))
       else if (f.exists(txt))
         Some(readString(f, txt).linesIterator.filter(_.nonEmpty)
           .toSeq.toDF("url"))
@@ -473,7 +536,7 @@ object IndexStore {
   def writeDeadIdsDf(spark: SparkSession, root: String, name: String,
                      ids: org.apache.spark.sql.DataFrame): Long = {
     val obs = org.apache.spark.sql.Observation()
-    ids.toDF("doc_id")
+    ids.toDF("doc_id").select(col("doc_id").cast(LongType))
       .observe(obs, org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("cnt"))
       .write.mode("overwrite")
@@ -489,7 +552,7 @@ object IndexStore {
   def readDeadIdsDf(spark: SparkSession, root: String, names: Seq[String])
       : Option[org.apache.spark.sql.DataFrame] =
     if (names.isEmpty) None
-    else Some(names.map(n => spark.read.parquet(s"$root/dead/$n"))
+    else Some(names.map(n => readPinned(spark, deadIdsSchema, s"$root/dead/$n"))
       .reduce(_ unionByName _))
 
   /** Total rows across the named dead batches from the `.count`

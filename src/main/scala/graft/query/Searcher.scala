@@ -88,41 +88,39 @@ final class Searcher(
   /** How many segments [[reopen]] carried over (ops/test visibility). */
   val reusedSegmentCount: Int = reusedTables.size
 
-  /** All per-segment relations, opened IN PARALLEL: each
-    * `spark.read.parquet` pays a driver-side file listing + footer
-    * read, and doing 5 tables × N segments serially made the cold ctor
-    * the dominant open cost on churned roots (~5-7 s at 20 segments —
-    * larger than the liveDocs derivation it precedes). A bounded pool
-    * overlaps the listings; relation creation is driver-only and
-    * thread-safe. Reused segments skip the open entirely. */
+  /** All per-segment relations, opened IN PARALLEL: each pinned-schema
+    * read ([[IndexStore.readDocstore]] and friends — no footer-inference
+    * job) still pays a driver-side file listing, and doing the tables ×
+    * N segments serially made the cold ctor the dominant open cost on
+    * churned roots (~5-7 s at 20 segments — larger than the liveDocs
+    * derivation it precedes). A bounded pool overlaps the listings;
+    * relation creation is driver-only and thread-safe. The new
+    * segments' stats rows come from one Spark job. Reused segments skip
+    * the open entirely. */
   private val segTables: Map[String, Searcher.SegTables] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration._
     val toOpen = snapshot.segments.filterNot(reusedTables.contains)
     if (toOpen.isEmpty) reusedTables
     else {
+      val stats = IndexStore.readSegmentStats(spark, root, toOpen)
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(math.max(toOpen.size, 1), 8))
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
       try {
         val futs = toOpen.map(s => Future(s -> Searcher.SegTables(
-          spark.read.parquet(IndexStore.docstorePath(root, s)),
+          IndexStore.readDocstore(spark, root, s),
           IndexStore.readPostingsOrEmpty(spark, root, s),
-          spark.read.parquet(IndexStore.termStatsPath(root, s)),
-          spark.read.parquet(IndexStore.statsPath(root, s)),
+          IndexStore.readTermStats(spark, root, s),
+          stats(s),
           IndexStore.readSegmentConfig(spark, root, s))))
         Await.result(Future.sequence(futs), 10.minutes).toMap ++ reusedTables
       } finally pool.shutdown()
     }
   }
 
-  // allowMissingColumns: a legacy segment's stats lack `id_ceiling` while
-  // a round-3 append's carry it — a strict unionByName would make a valid
-  // mixed-version index unreadable (missing columns read as null, and
-  // every consumer aggregates only columns present in both)
   private def unionSegs(tableOf: Searcher.SegTables => DataFrame): DataFrame =
-    snapshot.segments.map(s => tableOf(segTables(s)))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+    snapshot.segments.map(s => tableOf(segTables(s))).reduce(_ unionByName _)
 
   /** Row store (S8): doc_id, url, warc_ts, lang, text, dl — UNCACHED
     * (parquet-backed; column pruning keeps narrow reads cheap). The
@@ -174,8 +172,8 @@ final class Searcher(
   /** One postings relation per segment, created ONCE (in [[segTables]]):
     * re-reading per query would re-list the partition directories on
     * every plan (driver-side latency), while a shared relation caches
-    * its file index. Schema pinned in [[IndexStore.postingsSchema]]
-    * (S7's create-empty-index case has no footers to infer from). */
+    * its file index. Read with the pinned [[IndexStore.postingsSchema]],
+    * which also covers S7's create-empty-index case (no footers). */
   private val segPostings: Map[String, DataFrame] =
     segTables.view.mapValues(_.postings).toMap
 
@@ -252,12 +250,12 @@ final class Searcher(
         max("max_tf").as("max_tf"), min("min_dl").as("min_dl"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-  /** Collection statistics (S10): N, avgdl over all segments. */
+  /** Collection statistics (S10): N, avgdl over all segments, from the
+    * stats rows read at open (no job here). */
   val (docCount: Long, avgdl: Double) = {
-    val r = unionSegs(_.stats)
-      .agg(sum("doc_count"), sum("sum_dl")).head()
-    val n = if (r.isNullAt(0)) 0L else r.getLong(0)
-    val s = if (r.isNullAt(1)) 0L else r.getLong(1)
+    val st = snapshot.segments.map(segTables(_).stats)
+    val n = st.map(_.docCount).sum
+    val s = st.map(_.sumDl).sum
     (n, if (n == 0) 0.0 else s.toDouble / n)
   }
 
@@ -1801,7 +1799,8 @@ final class Searcher(
     val f = IndexStore.fs(spark, root)
     val paths = snapshot.segments.map(s => IndexStore.facetsPath(root, s))
     if (paths.forall(p => f.exists(new org.apache.hadoop.fs.Path(p))))
-      Some(paths.map(spark.read.parquet(_)).reduce(_ unionByName _))
+      Some(snapshot.segments.map(IndexStore.readFacets(spark, root, _))
+        .reduce(_ unionByName _))
     else None
   }
 
@@ -2220,13 +2219,13 @@ object Searcher {
     }
   }
 
-  /** One segment's five relations (docstore/postings/term_stats/stats +
-    * config), created once per open and shared across queries — and, via
-    * [[Searcher.reopen]], across searcher generations (segment dirs are
-    * immutable once their snapshot commits). */
+  /** One segment's relations (docstore/postings/term_stats), its stats
+    * row and its config, created once per open and shared across
+    * queries — and, via [[Searcher.reopen]], across searcher generations
+    * (segment dirs are immutable once their snapshot commits). */
   private[query] final case class SegTables(
-      docstore: DataFrame, postings: DataFrame,
-      termStats: DataFrame, stats: DataFrame,
+      docstore: DataFrame, postings: DataFrame, termStats: DataFrame,
+      stats: IndexStore.SegmentStats,
       config: Option[IndexStore.SegmentConfig])
 
   /** A parsed clause subset resolved to foldable frames (the

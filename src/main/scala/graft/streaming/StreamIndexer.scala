@@ -24,11 +24,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
 object StreamIndexer {
 
   /** Next free doc_id for a micro-batch append: max `id_ceiling` across
-    * the snapshot's segments ([[IndexBuilder.nextAppendBase]] — stats
-    * rows only, no docstore scan). NOT Σ doc_count: a compaction run
-    * against a streamed root (e.g. [[IndexBuilder.mergeCompactTiered]]
-    * draining a segment backlog) keeps original doc_ids WITH GAPS, so a
-    * count sum would hand the next micro-batch COLLIDING ids
+    * the snapshot's segments ([[IndexBuilder.nextAppendBase]] — one job
+    * over the stats rows, no docstore scan). NOT Σ doc_count: a
+    * compaction run against a streamed root (e.g.
+    * [[IndexBuilder.mergeCompactTiered]] draining a segment backlog)
+    * keeps original doc_ids WITH GAPS, so a count sum would hand the
+    * next micro-batch COLLIDING ids
     * (invariant 12 — same rule as the batch APPEND path). */
   def nextDocId(spark: SparkSession, root: String,
                 snap: IndexStore.Snapshot): Long =
@@ -49,14 +50,14 @@ object StreamIndexer {
           IndexStore.Snapshot(0L, Seq(seg), Seq.empty,
             dead = Some(Seq.empty)))
       case Some(snap) =>
-        IndexBuilder.buildSegment(spark, batch, dict, root, seg,
-          nextDocId(spark, root, snap), cfg, s"stream-batch-$batchId")
+        val report = IndexBuilder.buildSegment(spark, batch, dict, root,
+          seg, nextDocId(spark, root, snap), cfg, s"stream-batch-$batchId")
         // advanceForAppend maintains the superseded-id sidecar: upserted
         // urls across micro-batches stay O(appends) at searcher open —
         // a streamed root accumulating thousands of segments must never
         // re-derive liveDocs with a corpus window
         IndexStore.writeSnapshot(spark, root,
-          IndexBuilder.advanceForAppend(spark, root, snap, seg))
+          IndexBuilder.advanceForAppend(spark, root, snap, report))
     }
   }
 
